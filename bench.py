@@ -12,13 +12,15 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = "32"
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
 
 # One headline per operator family (reference core, extensions, LLM ops,
 # streaming-batch) — the judged throughput surface.
@@ -400,6 +402,7 @@ def main() -> None:
 
         from bigdata_rags_spark.io.bucketing import drop_managed_table
         from bigdata_rags_spark.io.readers import read_testdata
+        from bigdata_rags_spark.io.tablesets import staging_name
         from bigdata_rags_spark.similarity.pq import (
             append_ivfpq_index,
             build_ivfpq_index,
@@ -411,13 +414,8 @@ def main() -> None:
         )
 
         prefix = "bench_ivfpq_phase"
-        tables = [
-            f"{prefix}_{s}"
-            for s in (
-                "codes", "vectors", "meta", "tombstones",
-                "codes__compacting", "vectors__compacting",
-            )
-        ]
+        live = [f"{prefix}_{s}" for s in ("codes", "vectors", "meta", "tombstones")]
+        tables = live + [staging_name(t) for t in live]
         for t in tables:
             drop_managed_table(spark, t)
         e = read_testdata(spark, SF_DIR, "embeddings")["embeddings"]
@@ -496,18 +494,23 @@ def main() -> None:
     # driver writes CORRECTNESS_r{N} BEFORE bench, so a newer correctness file
     # than any bench file names the in-flight round; else next-after-max-bench.
     # (A rerun after the driver wrote BOTH r{N} files still needs the env var.)
-    def _max_round(prefix: str) -> int:
+    # A run at another core count than the default is its own series
+    # (BENCH_r{N}_c{cores}.json): its round counts only that series' bench
+    # files, and its detail file carries the same suffix.
+    cores = "" if CPUS == DEFAULT_CPUS else f"_c{CPUS}"
+
+    def _max_round(prefix: str, suffix: str = "") -> int:
         return max(
             (
-                int(f[len(prefix):-len(".json")])
+                int(m.group(1))
                 for f in os.listdir(os.path.dirname(os.path.abspath(__file__)))
-                if f.startswith(prefix) and f.endswith(".json")
-                and f[len(prefix):-len(".json")].isdigit()
+                if (m := re.fullmatch(rf"{prefix}(\d+){suffix}\.json", f))
             ),
             default=0,
         )
 
-    max_bench, max_corr = _max_round("BENCH_r"), _max_round("CORRECTNESS_r")
+    max_bench = _max_round("BENCH_r", cores)
+    max_corr = _max_round("CORRECTNESS_r")
     round_no = (
         int(env_round)
         if env_round
@@ -529,7 +532,8 @@ def main() -> None:
         "sf": sf_val,
     }
     detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), f"BENCH_DETAIL_r{round_no}.json"
+        os.path.dirname(os.path.abspath(__file__)),
+        f"BENCH_DETAIL_r{round_no}{cores}.json",
     )
     with open(detail_path, "w") as fh:
         json.dump(
@@ -545,6 +549,7 @@ def main() -> None:
             indent=1,
         )
     summary["detail_file"] = os.path.basename(detail_path)
+    summary["queries_warm_med"] = warm_med
     print(json.dumps(summary))
 
 

@@ -301,7 +301,7 @@ def build_minhash_store(
       collision-verification point lookups read co-located buckets.  Band
       keys derive from the signature columns with a cheap stack (no raw
       text needed), so one table serves both the band join and the verify.
-    - ``{prefix}_meta`` (param, val): num_hashes, rows_per_band, shingle_k,
+    - ``{prefix}_meta``: num_hashes, rows_per_band, shingle_k,
       num_buckets — the FROZEN banding (ingest reloads it and never
       re-derives it from a count; re-deriving per batch would key new
       bands incompatibly with the stored band table).
@@ -315,34 +315,24 @@ def build_minhash_store(
             "pass BOTH num_hashes and rows_per_band or NEITHER "
             "(auto-derived from the stored corpus count at build time)"
         )
-    from bigdata_rags_spark.dedup.stores import write_store_meta
-    from bigdata_rags_spark.io.bucketing import drop_managed_table, write_bucketed
-    from bigdata_rags_spark.io.jobs import run_overlapped
+    from bigdata_rags_spark.io.tablesets import write_table_set
 
-    spark = existing.sparkSession
     if num_hashes is None:
         num_hashes, rows_per_band = auto_minhash_params(existing.count())
     sig = minhash_signatures(existing, id_col, text_col, num_hashes, shingle_k)
-    sig_table, meta_table = f"{table_prefix}_sig", f"{table_prefix}_meta"
-
-    def _w_sig() -> None:
-        drop_managed_table(spark, sig_table)
-        write_bucketed(sig, sig_table, "doc_id", num_buckets)
-
-    run_overlapped(
-        _w_sig,
-        lambda: write_store_meta(
-            spark,
-            meta_table,
-            {
-                "num_hashes": num_hashes,
-                "rows_per_band": rows_per_band,
-                "shingle_k": shingle_k,
-                "num_buckets": num_buckets,
-            },
-        ),
+    write_table_set(
+        existing.sparkSession,
+        table_prefix,
+        {"sig": (sig, "doc_id")},
+        num_buckets,
+        params={
+            "num_hashes": num_hashes,
+            "rows_per_band": rows_per_band,
+            "shingle_k": shingle_k,
+            "num_buckets": num_buckets,
+        },
     )
-    return sig_table, meta_table
+    return f"{table_prefix}_sig", f"{table_prefix}_meta"
 
 
 def incremental_minhash_keepers(
@@ -387,14 +377,15 @@ def incremental_minhash_keepers(
     if store_prefix is not None:
         # the PERSISTED store path (build_minhash_store): the stored side is
         # one bucketed-table scan — zero scans of the raw store documents —
-        # and the banding is reloaded from the store's frozen meta (caller
-        # banding literals are ignored; the frozen-parameter rule)
-        from bigdata_rags_spark.dedup.stores import read_store_meta
+        # and the banding and shingle width are reloaded from the store's
+        # frozen meta (caller banding literals are ignored; the
+        # frozen-parameter rule)
+        from bigdata_rags_spark.io.tablesets import read_params
 
         spark = batch.sparkSession
-        meta = read_store_meta(spark, f"{store_prefix}_meta")
-        num_hashes = int(meta["num_hashes"])
-        rows_per_band = int(meta["rows_per_band"])
+        meta = read_params(spark, store_prefix)
+        num_hashes, rows_per_band = meta["num_hashes"], meta["rows_per_band"]
+        shingle_k = meta["shingle_k"]
         sig_ex = spark.table(f"{store_prefix}_sig")
     else:
         # the two parameters are a unit (the stored index's frozen banding):
@@ -407,10 +398,11 @@ def incremental_minhash_keepers(
             )
         if num_hashes is None:
             num_hashes, rows_per_band = auto_minhash_params(existing.count())
+        shingle_k = 5
         # sig_ex is DERIVED (shingle explode + num_hashes mins) and feeds
         # bands + verify: materialize (r16; CLAUDE.md multi-branch rule)
         sig_ex = minhash_signatures(
-            existing, id_col, text_col, num_hashes
+            existing, id_col, text_col, num_hashes, shingle_k
         ).localCheckpoint()
     need_eq = math.ceil(threshold * num_hashes)
 
@@ -419,7 +411,9 @@ def incremental_minhash_keepers(
     # intra-batch join) plus the two verify joins: without materialization
     # the signature pass re-executed ~6x (measured r16: 60 parquet scans in
     # one plan; CLAUDE.md multi-branch rule).  One row per doc — small.
-    sig_b = minhash_signatures(batch, id_col, text_col, num_hashes).localCheckpoint()
+    sig_b = minhash_signatures(
+        batch, id_col, text_col, num_hashes, shingle_k
+    ).localCheckpoint()
     bands_ex = lsh_bands(sig_ex, rows_per_band)
     bands_b = lsh_bands(sig_b, rows_per_band)
 

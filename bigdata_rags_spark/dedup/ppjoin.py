@@ -203,15 +203,12 @@ def build_ppjoin_store(
       bucketed on ``shingle`` (the candidate join key);
     - ``{prefix}_sets`` (doc_id, sh, n): sorted distinct-shingle arrays for
       verification, bucketed on ``doc_id`` (the verify point-lookup key);
-    - ``{prefix}_meta`` (param, val): k, t_micro (``round(t*1e6)`` — exact
+    - ``{prefix}_meta``: k, t_micro (``round(t*1e6)`` — exact
       round-trip for <= 6-decimal thresholds), num_buckets.  Ingest reloads
-      these and never re-derives them (`dedup/stores.py`).
+      these and never re-derives them (`io/tablesets.py`).
     """
-    from bigdata_rags_spark.dedup.stores import write_store_meta
-    from bigdata_rags_spark.io.bucketing import drop_managed_table, write_bucketed
-    from bigdata_rags_spark.io.jobs import run_overlapped
+    from bigdata_rags_spark.io.tablesets import write_table_set
 
-    spark = existing.sparkSession
     t_milli = math.floor(threshold * 1000)
     # the shingle explode feeds three consumers (df agg, prefix, sets) and
     # dfreq feeds two (its own table + the prefix ranking) — materialize
@@ -222,30 +219,22 @@ def build_ppjoin_store(
         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
         .localCheckpoint()
     )
-    tables = {s: f"{table_prefix}_{s}" for s in ("df", "prefix", "sets", "meta")}
-
-    def _w(frame: DataFrame, table: str, bucket_col: str):
-        def go() -> None:
-            drop_managed_table(spark, table)
-            write_bucketed(frame, table, bucket_col, num_buckets)
-
-        return go
-
-    run_overlapped(
-        _w(dfreq, tables["df"], "shingle"),
-        _w(_prefix_frame(ex_sh, dfreq, t_milli), tables["prefix"], "shingle"),
-        _w(_sets_frame(ex_sh), tables["sets"], "doc_id"),
-        lambda: write_store_meta(
-            spark,
-            tables["meta"],
-            {
-                "k": k,
-                "t_micro": round(threshold * 1_000_000),
-                "num_buckets": num_buckets,
-            },
-        ),
+    write_table_set(
+        existing.sparkSession,
+        table_prefix,
+        {
+            "df": (dfreq, "shingle"),
+            "prefix": (_prefix_frame(ex_sh, dfreq, t_milli), "shingle"),
+            "sets": (_sets_frame(ex_sh), "doc_id"),
+        },
+        num_buckets,
+        params={
+            "k": k,
+            "t_micro": round(threshold * 1_000_000),
+            "num_buckets": num_buckets,
+        },
     )
-    return tables["df"], tables["prefix"], tables["sets"], tables["meta"]
+    return tuple(f"{table_prefix}_{s}" for s in ("df", "prefix", "sets", "meta"))
 
 
 def incremental_prefix_filter_keepers(
@@ -292,11 +281,11 @@ def incremental_prefix_filter_keepers(
             "store_prefix (persisted prefix-filter index)"
         )
     if store_prefix is not None:
-        from bigdata_rags_spark.dedup.stores import read_store_meta
+        from bigdata_rags_spark.io.tablesets import read_params
 
         spark = batch.sparkSession
-        meta = read_store_meta(spark, f"{store_prefix}_meta")
-        k = int(meta["k"])
+        meta = read_params(spark, store_prefix)
+        k = meta["k"]
         threshold = meta["t_micro"] / 1_000_000
         t_milli = math.floor(threshold * 1000)
         dfreq = spark.table(f"{store_prefix}_df")

@@ -185,30 +185,20 @@ def build_winnow_store(
       no store-side exchange.  The cap (df > max_df dropped) is a FROZEN
       property of the stored population, pre-applied here exactly as the
       inline path applies it.
-    - ``{prefix}_meta`` (param, val): k, w, max_df, num_buckets — ingest
-      reloads these and never re-derives them (`dedup/stores.py`).
+    - ``{prefix}_meta``: k, w, max_df, num_buckets — ingest
+      reloads these and never re-derives them (`io/tablesets.py`).
     """
-    from bigdata_rags_spark.dedup.stores import write_store_meta
-    from bigdata_rags_spark.io.bucketing import drop_managed_table, write_bucketed
-    from bigdata_rags_spark.io.jobs import run_overlapped
+    from bigdata_rags_spark.io.tablesets import write_table_set
 
-    spark = existing.sparkSession
     ke = _capped_fingerprints(existing, k, w, max_df, id_col, text_col)
-    fp_table, meta_table = f"{table_prefix}_fp", f"{table_prefix}_meta"
-
-    def _w_fp() -> None:
-        drop_managed_table(spark, fp_table)
-        write_bucketed(ke, fp_table, "sel_hash", num_buckets)
-
-    run_overlapped(
-        _w_fp,
-        lambda: write_store_meta(
-            spark,
-            meta_table,
-            {"k": k, "w": w, "max_df": max_df, "num_buckets": num_buckets},
-        ),
+    write_table_set(
+        existing.sparkSession,
+        table_prefix,
+        {"fp": (ke, "sel_hash")},
+        num_buckets,
+        params={"k": k, "w": w, "max_df": max_df, "num_buckets": num_buckets},
     )
-    return fp_table, meta_table
+    return f"{table_prefix}_fp", f"{table_prefix}_meta"
 
 
 def incremental_winnow_keepers(
@@ -259,11 +249,11 @@ def incremental_winnow_keepers(
             "store_prefix (persisted fingerprint index)"
         )
     if store_prefix is not None:
-        from bigdata_rags_spark.dedup.stores import read_store_meta
+        from bigdata_rags_spark.io.tablesets import read_params
 
         spark = batch.sparkSession
-        meta = read_store_meta(spark, f"{store_prefix}_meta")
-        k, w, max_df = int(meta["k"]), int(meta["w"]), int(meta["max_df"])
+        meta = read_params(spark, store_prefix)
+        k, w, max_df = meta["k"], meta["w"], meta["max_df"]
         ke = spark.table(f"{store_prefix}_fp")
     else:
         ke = _capped_fingerprints(existing, k, w, max_df, id_col, text_col)

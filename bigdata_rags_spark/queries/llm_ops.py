@@ -7770,9 +7770,9 @@ def embedding_ivfpq_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # disjoint table prefixes) — exactly the guide §2.6 shape: run them from
     # two driver threads so shard B's jobs back-fill shard A's write tails
     # instead of waiting for them (r17; the tables written are identical)
-    from bigdata_rags_spark.similarity.pq import _run_overlapped
+    from bigdata_rags_spark.io.jobs import run_overlapped
 
-    _run_overlapped(
+    run_overlapped(
         lambda: build_ivfpq_index(
             e.filter(F.col("vec_id") % 3 != 0), table_prefix="bdrs_ivfpq_mra"
         ),

@@ -44,9 +44,12 @@ from pyspark.sql import functions as F
 
 from bigdata_rags_spark.functions.vectors import as_double_array
 
-# independent index-table writes / bounded check jobs overlap on driver
-# threads (guide §2.6) — shared helper, also used by the dedup stores
-from bigdata_rags_spark.io.jobs import run_overlapped as _run_overlapped
+from bigdata_rags_spark.io.jobs import run_overlapped
+from bigdata_rags_spark.io.tablesets import (
+    finish_interrupted_swap,
+    read_params,
+    write_table_set,
+)
 from bigdata_rags_spark.similarity.topk import local_topk_prefilter
 
 M_SUB = 16
@@ -544,84 +547,6 @@ def ivfpq_search_rerank(
     )
 
 
-def _write_index_meta(
-    spark,
-    table: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    num_buckets: int,
-) -> None:
-    """Persist the index's quantizers WITH the index (``{prefix}_meta``).
-
-    The quantizers ARE part of the index: serving with any other centroids
-    or codebooks than the ones the codes were encoded with silently returns
-    garbage (the codes are meaningless under a different codebook).  FAISS
-    serializes them into the index file for exactly this reason; here they
-    are a tiny managed table of (kind, a, b, pos, val) doubles — exact
-    round-trip, so a fixed-literal build re-serves bit-identically."""
-    from bigdata_rags_spark.io.bucketing import drop_managed_table
-
-    import pandas as pd
-
-    rows = [
-        ("cent", i, 0, p, float(v))
-        for i, c in enumerate(centroids)
-        for p, v in enumerate(c)
-    ]
-    rows += [
-        ("book", j, code, p, float(v))
-        for j, book in enumerate(codebooks)
-        for code, c in enumerate(book)
-        for p, v in enumerate(c)
-    ]
-    rows.append(("conf", num_buckets, 0, 0, 0.0))
-    # ship the ~20k meta rows through ONE Arrow batch instead of pickling
-    # tuples row-by-row (guide §6 "Arrow for driver transfers"; the wide
-    # trained codebooks made the pickle path a measurable slice of every
-    # build replay).  Same rows, same schema, same table content.
-    pdf = pd.DataFrame(rows, columns=["kind", "a", "b", "pos", "val"]).astype(
-        {"a": "int32", "b": "int32", "pos": "int32", "val": "float64"}
-    )
-    df = spark.createDataFrame(pdf, "kind string, a int, b int, pos int, val double")
-    drop_managed_table(spark, table)
-    df.coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(table)
-
-
-def _read_index_meta(
-    spark, table: str
-) -> tuple[list[list[float]], list[list[list[float]]], int]:
-    """(centroids, codebooks, num_buckets) back from ``{prefix}_meta`` — a
-    bounded driver action (n_cells*dim + m*k*sub + 1 rows, a few thousand
-    doubles at the widest auto_n_cells width)."""
-    # one Arrow batch to the driver instead of a row-collect (guide §6);
-    # identical reconstruction — values round-trip exactly (doubles are
-    # stored and read bit-for-bit either way)
-    pdf = spark.table(table).toPandas()
-    cents_d: dict[int, dict[int, float]] = {}
-    books_d: dict[tuple[int, int], dict[int, float]] = {}
-    num_buckets = 0
-    for kind, a, b, pos, val in pdf.itertuples(index=False):
-        if kind == "cent":
-            cents_d.setdefault(a, {})[pos] = float(val)
-        elif kind == "book":
-            books_d.setdefault((a, b), {})[pos] = float(val)
-        else:
-            num_buckets = int(a)
-    cents = [
-        [cents_d[i][p] for p in range(len(cents_d[i]))] for i in sorted(cents_d)
-    ]
-    m = max(j for j, _ in books_d) + 1
-    k = max(c for _, c in books_d) + 1
-    books = [
-        [
-            [books_d[(j, code)][p] for p in range(len(books_d[(j, code)]))]
-            for code in range(k)
-        ]
-        for j in range(m)
-    ]
-    return cents, books, num_buckets
-
-
 _CODES_RESERVED = ("id", "m", "code", "cell")
 
 
@@ -700,8 +625,10 @@ def build_ivfpq_index(
     ``train_pq_codebooks`` — training is rows-only by nature, but a
     TRAINED-then-persisted index re-serves deterministically because the
     trained literals are frozen in meta at build time).
+
+    The set is replaced through ``io/tablesets.write_table_set``: written to
+    staging tables, swapped in only when every write succeeded.
     """
-    from bigdata_rags_spark.io.bucketing import drop_managed_table, write_bucketed
     from bigdata_rags_spark.similarity.ivf import (
         fixed_centroids,
         train_ivf_centroids,
@@ -728,36 +655,24 @@ def build_ivfpq_index(
     codes = _encode_with_cells(corpus, books, cents, id_col=id_col, vec_col=vec_col)
     codes = _attach_metadata(codes, metadata)
 
-    # The three index writes are INDEPENDENT jobs the driver used to call
-    # sequentially, so each write's task tail left the executors idle
-    # (guide §2.6 "overlap independent jobs"): run them from a small driver
-    # thread pool — the vectors write back-fills the codes write's tail and
-    # the tiny meta write hides entirely.  Actions are only sequential
-    # because driver code calls them sequentially; the per-table drop+write
-    # pairs touch disjoint tables, and Spark serializes the metastore calls
-    # internally.  Table contents are byte-identical to the sequential form.
-    def _w_codes() -> None:
-        drop_managed_table(spark, codes_table)
-        write_bucketed(codes, codes_table, "cell", num_buckets)
-
-    def _w_vectors() -> None:
-        drop_managed_table(spark, vectors_table)
-        write_bucketed(
-            corpus.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+    # a rebuild starts clean: stale tombstones from a prior index under the
+    # same prefix must not mask freshly-indexed vectors
+    write_table_set(
+        spark,
+        table_prefix,
+        {
+            "codes": (codes, "cell"),
+            "vectors": (
+                corpus.select(
+                    F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+                ),
+                "vec_id",
             ),
-            vectors_table,
-            "vec_id",
-            num_buckets,
-        )
-
-    def _w_meta() -> None:
-        _write_index_meta(spark, f"{table_prefix}_meta", cents, books, num_buckets)
-        # a rebuild starts clean: stale tombstones from a prior index under
-        # the same prefix must not mask freshly-indexed vectors
-        drop_managed_table(spark, f"{table_prefix}_tombstones")
-
-    _run_overlapped(_w_codes, _w_vectors, _w_meta)
+            "tombstones": None,
+        },
+        num_buckets,
+        params={"centroids": cents, "codebooks": books, "num_buckets": num_buckets},
+    )
     return codes_table, vectors_table
 
 
@@ -817,9 +732,9 @@ def ivfpq_index_serve(
     if centroids is None or codebooks is None:
         # the quantizers travel WITH the index ({prefix}_meta): serving a
         # trained index with the default literals would score garbage codes
-        meta_cents, meta_books, _ = _read_index_meta(spark, f"{table_prefix}_meta")
-        cents = centroids if centroids is not None else meta_cents
-        books = codebooks if codebooks is not None else meta_books
+        meta = read_params(spark, table_prefix)
+        cents = centroids if centroids is not None else meta["centroids"]
+        books = codebooks if codebooks is not None else meta["codebooks"]
     else:
         cents, books = centroids, codebooks
 
@@ -942,7 +857,8 @@ def append_ivfpq_index(
     from bigdata_rags_spark.io.bucketing import write_bucketed
 
     spark = batch.sparkSession
-    cents, books, num_buckets = _read_index_meta(spark, f"{table_prefix}_meta")
+    meta = read_params(spark, table_prefix)
+    cents, books, num_buckets = meta["centroids"], meta["codebooks"], meta["num_buckets"]
 
     codes_table = f"{table_prefix}_codes"
     vectors_table = f"{table_prefix}_vectors"
@@ -955,7 +871,7 @@ def append_ivfpq_index(
     # the neighbor at two ranks, displacing a real top-k hit — and a later
     # compact keeps the duplicates forever (the tombstone is gone).  So
     # BEFORE the bucketed insert, physically purge batch∩tombstone ids via
-    # the same staging-swap machinery as compact.  The rewrite is bounded
+    # the same staged swap as compact.  The rewrite is bounded
     # (it only fires when the batch actually intersects a live tombstone),
     # and purge-before-insert makes a crashed-then-retried append
     # idempotent: the retry's purge removes the prior attempt's batch rows
@@ -989,7 +905,7 @@ def append_ivfpq_index(
         )
     # the two batch-sized appends are independent jobs: overlap them so the
     # vectors insert back-fills the codes insert's task tail (guide §2.6)
-    _run_overlapped(
+    run_overlapped(
         lambda: write_bucketed(
             codes.select(*existing_cols), codes_table, "cell", num_buckets, mode="append"
         ),
@@ -1039,51 +955,49 @@ def _purge_ids(
     table_prefix: str,
     ids: DataFrame,
     num_buckets: int,
+    clear_tombstones: bool = False,
 ) -> tuple[int, int]:
     """Physically rewrite ``{prefix}_codes`` and ``{prefix}_vectors`` without
     the given ``vec_id`` rows, preserving the bucket spec (so cell pruning
     and vec_id point lookups survive).  Shared by ``compact_ivfpq_index``
-    (full tombstone set) and ``append_ivfpq_index`` (the batch∩tombstone
-    revive purge, ADVICE r11 high).  Returns rows removed per table.
+    (full tombstone set, cleared in the same swap) and
+    ``append_ivfpq_index`` (the batch∩tombstone revive purge, ADVICE r11
+    high).  Returns rows removed per table.
 
-    Crash-safety: write-then-swap (ADVICE r10 #2) — survivors land in a
-    staging table FIRST, so the data always exists in full somewhere: the
-    old table (any failure before the drop) or the fully-written staging
-    table (failure between drop and rename).  The drop->rename window gets
-    EXPLICIT recovery: a rerun finishes the rename BEFORE the stale-staging
-    cleanup, or it would destroy the only copy.  Staging is complete
-    whenever the serving table is missing, because the drop only ever runs
-    after write_bucketed returned.  NOTE (ADVICE r11 low): on that recovery
-    path ``before`` is counted on the already-filtered staging contents, so
-    the removed counts for the recovered run understate the true delta —
-    counts reset after crash recovery; labels/content are always correct.
+    Crash-safety: a staged table-set write (``io/tablesets``), so the data
+    always exists in full somewhere — the old table, or the fully-written
+    staging table when a crash hit between the drop and the rename, which
+    a rerun renames into place BEFORE reading.  NOTE (ADVICE r11 low): on
+    that recovery path the removed counts are taken on the already-purged
+    table, so they understate the true delta — counts reset after crash
+    recovery; labels/content are always correct.
     """
-    from bigdata_rags_spark.io.bucketing import drop_managed_table, write_bucketed
-
-    removed = []
-    for table, key, bucket_col in (
-        (f"{table_prefix}_codes", "id", "cell"),
-        (f"{table_prefix}_vectors", "vec_id", "vec_id"),
-    ):
-        staging = f"{table}__compacting"
-        if not spark.catalog.tableExists(table):
-            if not spark.catalog.tableExists(staging):
-                raise RuntimeError(
-                    f"IVFPQ compact: neither {table} nor its staging table "
-                    "exists — the index was never built or was dropped externally"
-                )
-            spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        drop_managed_table(spark, staging)  # stale partial from a prior crash
-        cur = spark.table(table)
-        before = cur.count()
-        keep = cur.join(
-            F.broadcast(ids.select(F.col("vec_id").alias(key))), key, "left_anti"
-        )
-        write_bucketed(keep, staging, bucket_col, num_buckets)
-        after = spark.table(staging).count()
-        drop_managed_table(spark, table)
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-        removed.append(before - after)
+    finish_interrupted_swap(
+        spark, [f"{table_prefix}_codes", f"{table_prefix}_vectors"]
+    )
+    codes, vectors = (
+        spark.table(f"{table_prefix}_codes"),
+        spark.table(f"{table_prefix}_vectors"),
+    )
+    codes_ids = F.broadcast(ids.select(F.col("vec_id").alias("id")))
+    vector_ids = F.broadcast(ids.select("vec_id"))
+    removed: list[int] = []
+    write_table_set(
+        spark,
+        table_prefix,
+        {
+            "codes": (codes.join(codes_ids, "id", "left_anti"), "cell"),
+            "vectors": (vectors.join(vector_ids, "vec_id", "left_anti"), "vec_id"),
+            **({"tombstones": None} if clear_tombstones else {}),
+        },
+        num_buckets,
+        validate=lambda: removed.extend(
+            (
+                codes.join(codes_ids, "id", "left_semi").count(),
+                vectors.join(vector_ids, "vec_id", "left_semi").count(),
+            )
+        ),
+    )
     return (removed[0], removed[1])
 
 
@@ -1098,16 +1012,12 @@ def compact_ivfpq_index(
     (codes_rows_removed, vectors_rows_removed); after a mid-compact crash
     the recovered run's counts reset (see ``_purge_ids``).  One index-sized
     write, paid when the operator chooses, not per delete."""
-    from bigdata_rags_spark.io.bucketing import drop_managed_table
-
     tomb_table = f"{table_prefix}_tombstones"
     if not spark.catalog.tableExists(tomb_table):
         return (0, 0)
-    _, _, num_buckets = _read_index_meta(spark, f"{table_prefix}_meta")
+    num_buckets = read_params(spark, table_prefix)["num_buckets"]
     tombs = spark.table(tomb_table).select("vec_id").distinct().localCheckpoint()
-    removed = _purge_ids(spark, table_prefix, tombs, num_buckets)
-    drop_managed_table(spark, tomb_table)
-    return removed
+    return _purge_ids(spark, table_prefix, tombs, num_buckets, clear_tombstones=True)
 
 
 def merge_ivfpq_indexes(
@@ -1137,15 +1047,16 @@ def merge_ivfpq_indexes(
     merged index (delete survives merge; compact when it suits).  The
     merged tables keep the shared bucket spec, so cell pruning and vec_id
     point lookups hold on the merged index unchanged — pinned in
-    tests/test_ann_index.py."""
-    from bigdata_rags_spark.io.bucketing import drop_managed_table, write_bucketed
+    tests/test_ann_index.py.
 
+    The destination set is replaced through ``io/tablesets``: a failed
+    precondition leaves an existing destination index untouched and
+    servable."""
     if len(src_prefixes) < 2:
         raise ValueError("merge needs at least two source indexes")
-    metas = [_read_index_meta(spark, f"{p}_meta") for p in src_prefixes]
-    cents, books, num_buckets = metas[0]
+    metas = [read_params(spark, p) for p in src_prefixes]
     for p, m in zip(src_prefixes[1:], metas[1:]):
-        if m != (cents, books, num_buckets):
+        if m != metas[0]:
             raise ValueError(
                 f"quantizer mismatch: {src_prefixes[0]} and {p} were built "
                 "under different centroids/codebooks/bucket counts — their "
@@ -1182,41 +1093,31 @@ def merge_ivfpq_indexes(
             s = spark.table(t).select("vec_id")
             tombs = s if tombs is None else tombs.unionByName(s)
 
-    # The disjointness aggregate and the four dst writes are independent
-    # jobs over the already-persisted source tables — overlap them from a
-    # driver thread pool (guide §2.6; VERDICT r16 #3): the id-level check
-    # back-fills the co-bucketed writes' task tails instead of serializing
-    # a full extra pass ahead of them.  A detected overlap still fails
-    # LOUDLY — and now also drops the partially-merged dst tables so a
-    # failed merge can never be served.
-    n_dup_box: list[int] = []
-
-    def _w_codes() -> None:
-        drop_managed_table(spark, f"{dst_prefix}_codes")
-        write_bucketed(codes, f"{dst_prefix}_codes", "cell", num_buckets)
-
-    def _w_vectors() -> None:
-        drop_managed_table(spark, f"{dst_prefix}_vectors")
-        write_bucketed(vectors, f"{dst_prefix}_vectors", "vec_id", num_buckets)
-
-    def _w_meta_tombs() -> None:
-        _write_index_meta(spark, f"{dst_prefix}_meta", cents, books, num_buckets)
-        drop_managed_table(spark, f"{dst_prefix}_tombstones")
-        if tombs is not None:
-            tombs.distinct().write.mode("overwrite").format("parquet").saveAsTable(
-                f"{dst_prefix}_tombstones"
+    # The disjointness aggregate runs as the table set's validation thunk,
+    # overlapped with the dst staging writes (guide §2.6; VERDICT r16 #3):
+    # the id-level check back-fills the co-bucketed writes' task tails
+    # instead of serializing a full extra pass ahead of them.  A detected
+    # overlap fails LOUDLY before anything is swapped in.
+    def _check_disjoint() -> None:
+        n_dup = dup.count()
+        if n_dup > 0:
+            raise ValueError(
+                f"{n_dup} vector id(s) appear in more than one source index — "
+                "merged serving would double-count them; deduplicate shards first"
             )
 
-    _run_overlapped(
-        lambda: n_dup_box.append(dup.count()), _w_codes, _w_vectors, _w_meta_tombs
+    write_table_set(
+        spark,
+        dst_prefix,
+        {
+            "codes": (codes, "cell"),
+            "vectors": (vectors, "vec_id"),
+            "tombstones": None if tombs is None else (tombs.distinct(), None),
+        },
+        metas[0]["num_buckets"],
+        params=metas[0],
+        validate=_check_disjoint,
     )
-    if n_dup_box[0] > 0:
-        for t in ("codes", "vectors", "meta", "tombstones"):
-            drop_managed_table(spark, f"{dst_prefix}_{t}")
-        raise ValueError(
-            f"{n_dup_box[0]} vector id(s) appear in more than one source index — "
-            "merged serving would double-count them; deduplicate shards first"
-        )
     return f"{dst_prefix}_codes", f"{dst_prefix}_vectors"
 
 
@@ -1300,7 +1201,7 @@ def ivfpq_tuning_report(
     from bigdata_rags_spark.similarity.ivf import _nearest_cells
 
     spark = queries.sparkSession
-    cents, _books, _ = _read_index_meta(spark, f"{table_prefix}_meta")
+    cents = read_params(spark, table_prefix)["centroids"]
     n_cells = len(cents)
 
     qvec = queries.select(

@@ -35,18 +35,18 @@ def main() -> int:
         # expand to the bench median set of the latest BENCH_DETAIL file
         # (ADVICE r16: the flag was advertised but unimplemented)
         import json
+        import re
 
+        # the default-core runs only: BENCH_DETAIL_r{N}_c{cores}.json files
+        # come from other core counts
         details = sorted(
-            (
-                f
-                for f in os.listdir(REPO)
-                if f.startswith("BENCH_DETAIL_r") and f.endswith(".json")
-            ),
-            key=lambda f: int(f[len("BENCH_DETAIL_r"):-len(".json")]),
+            (int(m.group(1)), f)
+            for f in os.listdir(REPO)
+            if (m := re.fullmatch(r"BENCH_DETAIL_r(\d+)\.json", f))
         )
         if not details:
             sys.exit("--all-heavy needs a BENCH_DETAIL_r{N}.json to read the median set")
-        with open(os.path.join(REPO, details[-1])) as fh:
+        with open(os.path.join(REPO, details[-1][1])) as fh:
             heavy = json.load(fh)["heavy_top10"]
         names = [n for n in names if n != "--all-heavy"] + [
             n for n in heavy if n in REGISTRY

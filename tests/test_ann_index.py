@@ -117,13 +117,14 @@ def test_trained_index_serves_its_own_quantizers(spark, sf_smoke, _drop_tables):
     and serving reloads them: serve == on-the-fly with the same quantizers
     passed explicitly, the serving plan still has no corpus encode, and
     trained-index recall@5 is not below the fixed-codebook floor."""
+    from bigdata_rags_spark.io.tablesets import read_params
     from bigdata_rags_spark.similarity.knn import brute_force_topk
-    from bigdata_rags_spark.similarity.pq import _read_index_meta
 
     _drop_tables.append("t_ann_tr")
     e = read_testdata(spark, sf_smoke, "embeddings")["embeddings"]
     build_ivfpq_index(e, table_prefix="t_ann_tr", train=True, train_iter=2)
-    cents, books, _ = _read_index_meta(spark, "t_ann_tr_meta")
+    meta = read_params(spark, "t_ann_tr")
+    cents, books = meta["centroids"], meta["codebooks"]
     # trained quantizers actually differ from the fixed literals
     from bigdata_rags_spark.similarity.ivf import fixed_centroids
     from bigdata_rags_spark.similarity.pq import pq_codebooks
@@ -293,6 +294,7 @@ def test_compact_preserves_bucket_spec(spark, sf_smoke, _drop_tables):
     """The write-then-swap compact (ADVICE r10 #2) must leave the renamed
     tables with their bucket metadata: serving still prunes unprobed cell
     buckets, and no staging leftovers remain."""
+    from bigdata_rags_spark.io.tablesets import staging_name
     from bigdata_rags_spark.similarity.pq import (
         compact_ivfpq_index,
         delete_from_ivfpq_index,
@@ -306,8 +308,8 @@ def test_compact_preserves_bucket_spec(spark, sf_smoke, _drop_tables):
         e.filter(F.col("vec_id") % 5 == 0).select("vec_id"), table_prefix="t_ann_cb"
     )
     compact_ivfpq_index(spark, table_prefix="t_ann_cb")
-    assert not spark.catalog.tableExists("t_ann_cb_codes__compacting")
-    assert not spark.catalog.tableExists("t_ann_cb_vectors__compacting")
+    assert not spark.catalog.tableExists(staging_name("t_ann_cb_codes"))
+    assert not spark.catalog.tableExists(staging_name("t_ann_cb_vectors"))
     plan = _plan(
         ivfpq_index_serve(e.filter(F.col("vec_id") == 1), k=5, table_prefix="t_ann_cb")
     )
@@ -356,6 +358,7 @@ def test_compact_recovers_from_drop_rename_crash_window(spark, sf_smoke, _drop_t
     the rename FIRST — not destroy the staging as 'stale' — and serving
     afterwards equals the uninterrupted-compact result."""
     from bigdata_rags_spark.io.bucketing import drop_managed_table
+    from bigdata_rags_spark.io.tablesets import staging_name
     from bigdata_rags_spark.similarity.pq import (
         compact_ivfpq_index,
         delete_from_ivfpq_index,
@@ -380,7 +383,7 @@ def test_compact_recovers_from_drop_rename_crash_window(spark, sf_smoke, _drop_t
     staged = spark.table("t_ann_crash_codes").join(
         tombs.withColumnRenamed("vec_id", "id"), "id", "left_anti"
     )
-    staged.write.saveAsTable("t_ann_crash_codes__compacting")
+    staged.write.saveAsTable(staging_name("t_ann_crash_codes"))
     drop_managed_table(spark, "t_ann_crash_codes")
     try:
         removed_codes, _ = compact_ivfpq_index(spark, table_prefix="t_ann_crash")
@@ -388,14 +391,14 @@ def test_compact_recovers_from_drop_rename_crash_window(spark, sf_smoke, _drop_t
         # the rerun's own anti-join removes nothing more from codes
         assert removed_codes == 0
         assert spark.catalog.tableExists("t_ann_crash_codes")
-        assert not spark.catalog.tableExists("t_ann_crash_codes__compacting")
+        assert not spark.catalog.tableExists(staging_name("t_ann_crash_codes"))
         assert not spark.catalog.tableExists("t_ann_crash_tombstones")
         got = sorted(
             ivfpq_index_serve(q, k=5, table_prefix="t_ann_crash").collect(), key=key
         )
         assert got == expected
     finally:
-        drop_managed_table(spark, "t_ann_crash_codes__compacting")
+        drop_managed_table(spark, staging_name("t_ann_crash_codes"))
 
 
 @pytest.mark.slow  # ~16 s measured r17
@@ -485,6 +488,7 @@ def test_merge_indexes_lifecycle_and_guards(spark, sf_smoke, _drop_tables):
     mismatched quantizers, mismatched predicate-column schemas."""
     import pytest as _pytest
 
+    from bigdata_rags_spark.io.tablesets import staging_name
     from bigdata_rags_spark.similarity.pq import (
         build_ivfpq_index,
         delete_from_ivfpq_index,
@@ -508,9 +512,17 @@ def test_merge_indexes_lifecycle_and_guards(spark, sf_smoke, _drop_tables):
     plan = _plan(ivfpq_index_serve(q.limit(1), k=5, table_prefix="t_mrg_out"))
     m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
     assert m and int(m.group(1)) < int(m.group(2))  # pruning holds post-merge
-    # guard 1: overlapping shard ids double-count -> refuse
+    # guard 1: overlapping shard ids double-count -> refuse, and the failed
+    # merge leaves the existing destination index in place and serving
+    # exactly what it served before, with no staging table left behind
     with _pytest.raises(ValueError, match="more than one source index"):
         merge_ivfpq_indexes(spark, ["t_mrg_a", "t_mrg_a"], "t_mrg_out")
+    for s in ("codes", "vectors", "meta", "tombstones"):
+        assert spark.catalog.tableExists(f"t_mrg_out_{s}")
+        assert not spark.catalog.tableExists(staging_name(f"t_mrg_out_{s}"))
+    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+    after = ivfpq_index_serve(q, k=5, table_prefix="t_mrg_out").collect()
+    assert sorted(after, key=key) == sorted(res, key=key)
     # guard 2: different quantizers = different code spaces -> refuse
     build_ivfpq_index(b, table_prefix="t_mrg_bad", n_cells=8)
     with _pytest.raises(ValueError, match="quantizer mismatch"):

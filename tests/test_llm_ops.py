@@ -2461,6 +2461,32 @@ def test_text_dedup_store_paths_match_inline(spark):
         drop_managed_table(spark, t)
 
 
+def test_minhash_store_honours_frozen_shingle_k(spark):
+    """The MinHash store path shingles the batch at the store's frozen
+    ``shingle_k``: an exact copy of a stored document signs identically
+    and is dropped.  Shingled at any other width, the copy's signature
+    barely agrees with the stored one and the copy would survive."""
+    from bigdata_rags_spark.dedup.minhash import (
+        build_minhash_store,
+        incremental_minhash_keepers,
+    )
+    from bigdata_rags_spark.io.bucketing import drop_managed_table
+
+    existing, batch = _store_equivalence_fixture(spark)
+    build_minhash_store(
+        existing, "t_mh_k7", num_hashes=12, rows_per_band=2, shingle_k=7
+    )
+    kept = sorted(
+        r["doc_id"]
+        for r in incremental_minhash_keepers(batch, store_prefix="t_mh_k7").collect()
+    )
+    # 10 and 14 copy stored docs, 12 copies batch doc 11, 13 is too short
+    # to shingle at k=7 and survives by construction
+    assert kept == [11, 13]
+    for t in ("t_mh_k7_sig", "t_mh_k7_meta"):
+        drop_managed_table(spark, t)
+
+
 def test_text_dedup_store_params_frozen_from_meta(spark):
     """The store path reloads k/w/banding/threshold from ``{prefix}_meta``
     and IGNORES caller literals (the frozen-parameter rule — serving with
@@ -2468,16 +2494,16 @@ def test_text_dedup_store_params_frozen_from_meta(spark):
     mis-join); passing both existing and store_prefix is a loud error."""
     import pytest as _pytest
 
-    from bigdata_rags_spark.dedup.stores import read_store_meta
     from bigdata_rags_spark.dedup.winnow import (
         build_winnow_store,
         incremental_winnow_keepers,
     )
     from bigdata_rags_spark.io.bucketing import drop_managed_table
+    from bigdata_rags_spark.io.tablesets import read_params
 
     existing, batch = _store_equivalence_fixture(spark)
     build_winnow_store(existing, "t_win_meta", k=4, w=5, max_df=64)
-    meta = read_store_meta(spark, "t_win_meta_meta")
+    meta = read_params(spark, "t_win_meta")
     assert meta == {"k": 4, "w": 5, "max_df": 64, "num_buckets": 8}
     # caller literals disagree with the frozen meta -> meta wins: results
     # equal the store-built parameters' inline run
