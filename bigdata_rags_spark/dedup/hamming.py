@@ -1,36 +1,20 @@
-"""Banded-Hamming candidate joins — the shared primitive behind every
-fixed-width perceptual-fingerprint near-dup/retrieval operator in this repo
-(image 128-bit aHash, audio 126-bit frame-energy fingerprint, video 128-bit
-temporal fingerprint, and the retrieve-BY-modality capstones).
-
-Promoted from four per-query instantiations (VERDICT r14 next #5): the
-8×16-bit band equi-join + exact multi-word ``bit_count`` verify is one
-algorithm — only the word columns and the band-key expressions differ per
-fingerprint family.
-
-EXACTNESS (pigeonhole): with ``B`` bands and threshold ``max_hamming <=
-B - 1``, any pair within the threshold differs in at most B-1 bands, so at
-least one band matches exactly and the equi-join finds the pair.  The
-verify step then applies the exact Hamming predicate, so the banded plan
-EQUALS the all-pairs predicate — approximate-looking, exact semantics,
-which is why the DuckDB oracles state the plain all-pairs form.
-``banded_*`` functions assert this precondition rather than silently
-degrading to a lossy sketch.
-
-Scale shape (VERDICT r10 #2 lineage): fingerprints are 2-4 bigints/row;
-the band explode ships B (band, <=16-bit key) entries per row into an
-equi-join, so non-matching collision volume is ~N²/2^key_bits per band;
-the verify is a handful of bit_counts per candidate; nothing wider than
-ids + a few ints ever crosses an exchange.  Run
-`similarity/knn.lsh_bucket_skew_report`'s histogram logic on a band table
-first when the key distribution is in doubt — banded joins share LSH's
-data-correlated-skew failure mode (the r14 demotion).
+"""Banded-Hamming near-dup pairs and probes on the kernel in
+`dedup/banded.py`: the perceptual fingerprints (image 128-bit aHash, audio
+126-bit, video 128-bit temporal, the retrieve-BY-modality capstones) and
+the SimHash pairs.  A family is only its word columns and its band-key SQL
+expressions (``words128_band_exprs``, ``FP126_BAND_EXPRS``,
+``simhash.SIMHASH64_BANDS`` / ``SIMHASH16_BAND_EXPRS``); the verify
+(``hamming_verify``) is the exact multi-word ``bit_count``.  ``banded_*`` functions assert the
+pigeonhole precondition ``max_hamming <= bands - 1`` (kernel docstring)
+instead of silently going lossy, so they EQUAL the all-pairs predicate.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from bigdata_rags_spark.dedup.banded import BandKeys, band_candidates, hamming_distance, join_sides
 
 
 def words128_band_exprs(n_words: int = 4, bits_per_key: int = 16) -> list[str]:
@@ -53,18 +37,55 @@ FP126_BAND_EXPRS: list[str] = [
 ]
 
 
-def _band_rows(h: DataFrame, band_exprs: list[str], id_col: str, out_id: str) -> DataFrame:
-    bands = [
-        F.struct(F.lit(b).alias("band"), F.expr(expr).cast("bigint").alias("key"))
-        for b, expr in enumerate(band_exprs)
-    ]
-    return h.select(
-        F.col(id_col).alias(out_id), F.explode(F.array(*bands)).alias("bk")
-    ).select(out_id, "bk.band", "bk.key")
+def _layout(
+    word_cols: list[str] | None, band_exprs: list[str] | None, max_hamming: int
+) -> tuple[list[str], list[str]]:
+    word_cols = word_cols if word_cols is not None else [f"w{j}" for j in range(4)]
+    band_exprs = band_exprs if band_exprs is not None else words128_band_exprs()
+    if max_hamming > len(band_exprs) - 1:
+        raise ValueError(
+            f"pigeonhole exactness needs max_hamming <= bands-1; got "
+            f"{max_hamming} with {len(band_exprs)} bands"
+        )
+    return word_cols, band_exprs
 
 
-def _hamming_expr(word_cols: list[str], a: str, b: str) -> str:
-    return " + ".join(f"bit_count({a}{j} ^ {b}{j})" for j in range(len(word_cols)))
+def band_keys(band_exprs: list[str]) -> BandKeys:
+    """Kernel band keys from a family's band-key SQL expressions."""
+    return [(b, F.expr(e).cast("bigint")) for b, e in enumerate(band_exprs)]
+
+
+def hamming_verify(
+    cand: DataFrame,
+    a: DataFrame,
+    word_cols: list[str],
+    max_hamming: int,
+    id_col: str = "doc_id",
+    b: DataFrame | None = None,
+) -> DataFrame:
+    """``join_sides``' (id_a, id_b, a_<word>.., b_<word>..) plus the exact
+    ``hamming`` distance, kept where it is <= ``max_hamming``."""
+    return (
+        join_sides(cand, a, word_cols, id_col, b=b)
+        .withColumn("hamming", hamming_distance(word_cols).cast("int"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def hamming_pairs(
+    h: DataFrame,
+    word_cols: list[str],
+    band_exprs: list[str],
+    max_hamming: int,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(doc_a < doc_b, hamming <= max_hamming) pairs of a fingerprint frame
+    with no pigeonhole check: exact for ``max_hamming <= bands - 1``, a
+    high-recall heuristic above it."""
+    cand = band_candidates(h, band_keys(band_exprs), id_col)
+    return hamming_verify(cand, h, word_cols, max_hamming, id_col).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
+    )
 
 
 def banded_hamming_pairs(
@@ -78,39 +99,11 @@ def banded_hamming_pairs(
     fingerprint frame — the self-join form shared by the image/audio/video
     near-dup queries.  Defaults to the 128-bit w0..w3 family layout.
 
-    The fingerprint frame feeds FOUR plan branches (both explode sides,
-    both verify sides) — callers must localCheckpoint/cache it first (the
+    The fingerprint frame feeds three plan branches (the band explode and
+    both verify sides) — callers must localCheckpoint it first (the
     CLAUDE.md multi-branch rule; each near-dup query documents which)."""
-    word_cols = word_cols if word_cols is not None else [f"w{j}" for j in range(4)]
-    band_exprs = band_exprs if band_exprs is not None else words128_band_exprs()
-    if max_hamming > len(band_exprs) - 1:
-        raise ValueError(
-            f"pigeonhole exactness needs max_hamming <= bands-1; got "
-            f"{max_hamming} with {len(band_exprs)} bands"
-        )
-    exploded = _band_rows(h, band_exprs, id_col, "doc_id")
-    cand = (
-        exploded.alias("a")
-        .join(exploded.alias("b"), ["band", "key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    ha = h.select(
-        F.col(id_col).alias("doc_a"),
-        *[F.col(c).alias(f"a{j}") for j, c in enumerate(word_cols)],
-    )
-    hb = h.select(
-        F.col(id_col).alias("doc_b"),
-        *[F.col(c).alias(f"b{j}") for j, c in enumerate(word_cols)],
-    )
-    return (
-        cand.join(ha, "doc_a")
-        .join(hb, "doc_b")
-        .withColumn("hamming", F.expr(_hamming_expr(word_cols, "a", "b")).cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
+    word_cols, band_exprs = _layout(word_cols, band_exprs, max_hamming)
+    return hamming_pairs(h, word_cols, band_exprs, max_hamming, id_col)
 
 
 def banded_hamming_probe(
@@ -123,38 +116,18 @@ def banded_hamming_probe(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Asymmetric QUERY-vs-CORPUS serving form of ``banded_hamming_pairs``
-    (the retrieve-documents-BY-image/audio capstone probe): band both
-    sides, equi-join query bands against corpus bands, verify with the
-    exact multi-word bit_count, keep each query's top ``k`` at
-    hamming <= ``max_hamming`` (rank by hamming then match id).  Same
-    pigeonhole exactness; candidates ~|Q| x N/2^key_bits per band."""
-    word_cols = word_cols if word_cols is not None else [f"w{j}" for j in range(4)]
-    band_exprs = band_exprs if band_exprs is not None else words128_band_exprs()
-    if max_hamming > len(band_exprs) - 1:
-        raise ValueError(
-            f"pigeonhole exactness needs max_hamming <= bands-1; got "
-            f"{max_hamming} with {len(band_exprs)} bands"
-        )
-    cand = (
-        _band_rows(qh, band_exprs, id_col, "query_doc")
-        .join(_band_rows(ch, band_exprs, id_col, "match_doc"), ["band", "key"])
-        .filter(F.col("query_doc") != F.col("match_doc"))
-        .select("query_doc", "match_doc")
-        .distinct()
+    (the retrieve-documents-BY-image/audio capstone probe): the kernel's
+    probe mode joins query bands against corpus bands, the exact
+    multi-word bit_count verifies, and each query keeps its top ``k`` at
+    hamming <= ``max_hamming`` (rank by hamming then match id; a doc never
+    matches itself).  Same pigeonhole exactness; candidates ~|Q| x
+    N/2^key_bits per band."""
+    word_cols, band_exprs = _layout(word_cols, band_exprs, max_hamming)
+    cand = band_candidates(qh, band_keys(band_exprs), id_col, b=ch).filter(
+        F.col("id_a") != F.col("id_b")
     )
-    ha = qh.select(
-        F.col(id_col).alias("query_doc"),
-        *[F.col(c).alias(f"a{j}") for j, c in enumerate(word_cols)],
-    )
-    hb = ch.select(
-        F.col(id_col).alias("match_doc"),
-        *[F.col(c).alias(f"b{j}") for j, c in enumerate(word_cols)],
-    )
-    verified = (
-        cand.join(ha, "query_doc")
-        .join(hb, "match_doc")
-        .withColumn("hamming", F.expr(_hamming_expr(word_cols, "a", "b")).cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
+    verified = hamming_verify(cand, qh, word_cols, max_hamming, id_col, b=ch).select(
+        F.col("id_a").alias("query_doc"), F.col("id_b").alias("match_doc"), "hamming"
     )
     w = Window.partitionBy("query_doc").orderBy("hamming", "match_doc")
     return (

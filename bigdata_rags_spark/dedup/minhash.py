@@ -22,9 +22,9 @@ Broder 1997 / MMDS ch.3, expressed Spark-first):
               instead of k times cuts the dominant cost k-fold.
 3. bands:     concatenate ``rows_per_band`` consecutive minhashes (ordered
               by seed) into a band key.
-4. candidates: docs sharing any (band_id, band_key) — a groupBy/self-join on
-              the band key, i.e. the only shuffle keys are tiny hashes, never
-              the documents.
+4. candidates: docs sharing any (band_id, band_key) — the banded kernel's
+              self-join (`dedup/banded.py`), i.e. the only shuffle keys are
+              tiny hashes, never the documents.
 5. verify:    exact shingle-Jaccard on the (small) candidate set.
 
 Scale: |docs| x num_hashes intermediate rows, all narrow; the band join's
@@ -44,6 +44,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_rags_spark.dedup.banded import BandKeys, band_candidates, band_rows, join_sides
 from bigdata_rags_spark.functions.text import word_shingles, ws_tokens
 
 
@@ -152,6 +153,18 @@ def minhash_signatures(
     )
 
 
+def _band_keys(signatures: DataFrame, rows_per_band: int | None) -> BandKeys:
+    """One (band, key) entry per band: the seed-ordered concat of the
+    band's minhashes.  ``rows_per_band=None`` infers the banding that
+    produced the signature width (historical widths -> 2)."""
+    sig_cols = [c for c in signatures.columns if c.startswith("h")]
+    r = rows_per_band if rows_per_band is not None else _rows_per_band_for_width(len(sig_cols))
+    return [
+        (i, F.concat_ws("_", *sig_cols[i * r : (i + 1) * r]))
+        for i in range(len(sig_cols) // r)
+    ]
+
+
 def lsh_bands(
     signatures: DataFrame, rows_per_band: int | None = None
 ) -> DataFrame:
@@ -159,23 +172,8 @@ def lsh_bands(
     minhashes, derived from the wide signature matrix with a small explode
     (num_hashes/rows_per_band rows per doc).  ``rows_per_band=None`` infers
     the banding that produced the signature width (historical widths -> 2)."""
-    sig_cols = [c for c in signatures.columns if c.startswith("h")]
-    if rows_per_band is None:
-        rows_per_band = _rows_per_band_for_width(len(sig_cols))
-    n_bands = len(sig_cols) // rows_per_band
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.concat_ws(
-                    "_", *[sig_cols[i * rows_per_band + j] for j in range(rows_per_band)]
-                ).alias("band_key"),
-            )
-            for i in range(n_bands)
-        ]
-    )
-    return signatures.select("doc_id", F.explode(bands).alias("b")).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.band_key").alias("band_key")
+    return band_rows(signatures, _band_keys(signatures, rows_per_band)).select(
+        F.col("id").alias("doc_id"), "band", F.col("key").alias("band_key")
     )
 
 
@@ -187,17 +185,8 @@ def candidate_pairs_from_signatures(
     signatures themselves (e.g. Jaccard estimation) compute them once and
     feed both consumers instead of re-running the shingle->md5->min-agg
     pipeline."""
-    bands = lsh_bands(signatures, rows_per_band)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    return band_candidates(signatures, _band_keys(signatures, rows_per_band)).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
 
 
@@ -414,54 +403,20 @@ def incremental_minhash_keepers(
     sig_b = minhash_signatures(
         batch, id_col, text_col, num_hashes, shingle_k
     ).localCheckpoint()
-    bands_ex = lsh_bands(sig_ex, rows_per_band)
-    bands_b = lsh_bands(sig_b, rows_per_band)
+    keys = _band_keys(sig_b, rows_per_band)
+    hcols = [f"h{i}" for i in range(num_hashes)]
+    n_eq = sum((F.col(f"a_{c}") == F.col(f"b_{c}")).cast("int") for c in hcols)
 
-    sa = sig_b.select(
-        "doc_id", *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)]
-    )
-    sb_ex = sig_ex.select(
-        F.col("doc_id").alias("other"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)],
-    )
-    sb_in = sig_b.select(
-        F.col("doc_id").alias("other"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)],
-    )
-    n_eq = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(num_hashes)
-    )
-
-    def drops(cand: DataFrame, sb: DataFrame) -> DataFrame:
+    def drops(cand: DataFrame, other: DataFrame, dying: str) -> DataFrame:
         return (
-            cand.join(sa, "doc_id")
-            .join(sb, "other")
+            join_sides(cand, sig_b, hcols, b=other)
             .filter(n_eq >= need_eq)
-            .select(F.col("doc_id").alias(id_col))
+            .select(F.col(dying).alias(id_col))
             .distinct()
         )
 
-    a, e = bands_b.alias("a"), bands_ex.alias("e")
-    cand_ex = (
-        a.join(
-            e,
-            (F.col("a.band") == F.col("e.band"))
-            & (F.col("a.band_key") == F.col("e.band_key")),
-        )
-        .select(F.col("a.doc_id").alias("doc_id"), F.col("e.doc_id").alias("other"))
-        .distinct()
-    )
-    hi, lo = bands_b.alias("hi"), bands_b.alias("lo")
-    cand_in = (
-        hi.join(
-            lo,
-            (F.col("hi.band") == F.col("lo.band"))
-            & (F.col("hi.band_key") == F.col("lo.band_key"))
-            & (F.col("lo.doc_id") < F.col("hi.doc_id")),
-        )
-        .select(F.col("hi.doc_id").alias("doc_id"), F.col("lo.doc_id").alias("other"))
-        .distinct()
-    )
-    return batch.join(drops(cand_ex, sb_ex), id_col, "left_anti").join(
-        drops(cand_in, sb_in), id_col, "left_anti"
-    )
+    # (a) batch (a-side) probes the stored index (b-side); (b) batch self
+    # join, where the higher id of a verified pair dies
+    vs_store = drops(band_candidates(sig_b, keys, b=sig_ex), sig_ex, "id_a")
+    intra = drops(band_candidates(sig_b, keys), sig_b, "id_b")
+    return batch.join(vs_store, id_col, "left_anti").join(intra, id_col, "left_anti")

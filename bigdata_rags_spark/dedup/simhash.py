@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_rags_spark.dedup.banded import band_candidates
+from bigdata_rags_spark.dedup.hamming import band_keys, hamming_pairs, hamming_verify
 from bigdata_rags_spark.functions.text import ws_tokens
 
 SIMHASH_BITS = 16
@@ -51,6 +53,11 @@ def simhash16(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
 
 BANDS = 4
 BAND_BITS = 16
+#: the 64-bit fingerprint's layout: each 16-bit band column is its own
+#: band key and its own verify word
+SIMHASH64_BANDS = [f"band{k}" for k in range(BANDS)]
+#: the 16-bit fingerprint's layout: two 8-bit halves (lo, hi)
+SIMHASH16_BAND_EXPRS = ["simhash & 255", "shiftright(simhash, 8)"]
 
 
 def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -60,8 +67,8 @@ def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     chars [4k+1, 4k+4], so the concatenation is a true 64-bit simhash of
     the md5-prefix token hash.  Banding is the point (Manku et al. WWW'07):
     two 64-bit fingerprints within Hamming distance 3 MUST agree on at
-    least one of the 4 bands, so the near-dup join is 4 cheap equi-joins on
-    16-bit keys instead of an all-pairs scan — and, unlike the r1 16-bit
+    least one of the 4 bands, so the near-dup join is one equi-join on
+    (band, 16-bit key) instead of an all-pairs scan — and, unlike the r1 16-bit
     variant whose 8-bit halves saturate past ~10^5 docs, 16-bit bands give
     65536 buckets per table on corpus-scale data.  Keeping the four bands
     as separate 32-bit-safe ints sidesteps signed-64 overflow in BOTH
@@ -186,37 +193,6 @@ def simhash64_idf(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     return fp.withColumn("simhash_hex", hex_col)
 
 
-def _banded_hamming_pairs(fp: DataFrame, max_hamming: int) -> DataFrame:
-    """Shared banded candidate join + exact verify over a fingerprint frame
-    (doc_id, band0..band3): one HASH join per band (an OR-of-equalities
-    condition would push Catalyst to a nested-loop join — the all-pairs
-    scan banding exists to avoid), union + distinct to dedup multi-band
-    collisions, then the exact bit_count filter.  Both pair variants
-    (plain and idf-weighted) route here so banded-join fixes (e.g. the
-    AQE skew mitigation SCALE.md r11 names) apply once."""
-    a = fp.select(
-        F.col("doc_id").alias("doc_a"), *[F.col(f"band{k}").alias(f"a{k}") for k in range(BANDS)]
-    )
-    b = fp.select(
-        F.col("doc_id").alias("doc_b"), *[F.col(f"band{k}").alias(f"b{k}") for k in range(BANDS)]
-    )
-    cand = None
-    for k in range(BANDS):
-        pairs_k = a.join(
-            b, (F.col(f"a{k}") == F.col(f"b{k}")) & (F.col("doc_a") < F.col("doc_b"))
-        )
-        cand = pairs_k if cand is None else cand.unionByName(pairs_k)
-    cand = cand.distinct()
-    hamming = sum(
-        F.bit_count(F.col(f"a{k}").bitwiseXOR(F.col(f"b{k}"))) for k in range(BANDS)
-    )
-    return (
-        cand.withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 def simhash_idf_near_pairs64(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -226,7 +202,8 @@ def simhash_idf_near_pairs64(
     """``simhash_near_pairs64`` over the rarity-weighted fingerprint: same
     4x16-bit banded candidate join (pigeonhole-exact for hamming <= 3),
     skew-resistant band keys."""
-    return _banded_hamming_pairs(simhash64_idf(df, id_col, text_col), max_hamming)
+    fp = simhash64_idf(df, id_col, text_col)
+    return hamming_pairs(fp, SIMHASH64_BANDS, SIMHASH64_BANDS, max_hamming)
 
 
 def simhash_near_pairs64(
@@ -244,7 +221,8 @@ def simhash_near_pairs64(
     the oracle check apply the SAME candidate generation, so parity tests
     the whole pipeline, not just the filter.
     """
-    return _banded_hamming_pairs(simhash64(df, id_col, text_col), max_hamming)
+    fp = simhash64(df, id_col, text_col)
+    return hamming_pairs(fp, SIMHASH64_BANDS, SIMHASH64_BANDS, max_hamming)
 
 
 def simhash_near_pairs(
@@ -253,35 +231,24 @@ def simhash_near_pairs(
     text_col: str = "text",
     max_hamming: int = 2,
 ) -> DataFrame:
-    """Pairs whose fingerprints differ in <= max_hamming bits.
+    """(doc_a, doc_b, sim_a, sim_b, hamming) for pairs whose 16-bit
+    fingerprints differ in <= max_hamming bits.
 
-    Joins on the fingerprint split into two 8-bit halves (a pair within
-    Hamming distance <=2 of a 16-bit hash... must match at least one half
-    only when max_hamming <= 1 per half; for the general case at scale use
-    multi-probe banding — here both halves are tried, which is exact for
-    max_hamming <= 1 and high-recall for 2).
+    Candidates share at least one of the fingerprint's two 8-bit halves
+    (bands ``lo`` and ``hi`` of the banded kernel).  Recall is exact for
+    ``max_hamming <= 1``: one differing bit leaves one half untouched.
+    Above that the candidate set is lossy — two differing bits can touch
+    both halves; use ``simhash_near_pairs64`` (4 x 16-bit bands, exact
+    for hamming <= 3) when that matters.
     """
-    sh = simhash16(df, id_col, text_col)
-    halves = sh.select(
-        "doc_id",
-        "simhash",
-        (F.col("simhash") % 256).alias("lo"),
-        F.floor(F.col("simhash") / 256).cast("bigint").alias("hi"),
+    # the fingerprint feeds the band explode and both verify sides: read
+    # the documents once (a lazy cache does not protect multi-branch reuse)
+    sh = simhash16(df, id_col, text_col).localCheckpoint()
+    cand = band_candidates(sh, band_keys(SIMHASH16_BAND_EXPRS))
+    return hamming_verify(cand, sh, ["simhash"], max_hamming).select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        F.col("a_simhash").alias("sim_a"),
+        F.col("b_simhash").alias("sim_b"),
+        "hamming",
     )
-    a, b = halves.alias("a"), halves.alias("b")
-    cand = (
-        a.join(
-            b,
-            ((F.col("a.lo") == F.col("b.lo")) | (F.col("a.hi") == F.col("b.hi")))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return cand.withColumn("hamming", hamming).filter(F.col("hamming") <= max_hamming)

@@ -1454,7 +1454,14 @@ def text_hashed_idf_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     which IS the 10-plane/probe-2 theoretical floor for uncorrelated
     vectors.  Same LSH machinery, exact-cosine verify at 0.6 (the idf scale sits lower — see inline
     note); the extra cost is one (feature -> df) groupBy + a feature-keyed join (the
-    `tfidf_top_terms` shape)."""
+    `tfidf_top_terms` shape).
+
+    Calibration: the plane count self-scales from the DOCUMENTS count
+    (``auto_n_planes``), and the oracle pins 8 planes, which holds only for
+    N <= 2048 (pinned in tests/test_scaling_calibration.py).  The sf0.1
+    fixture's 5000 docs are outside that band: Spark uses
+    ``auto_n_planes(5000) = 10`` planes there, so it matches the oracle
+    replayed at ``n_planes=10``, not the registered 8-plane SQL."""
     from bigdata_rags_spark.functions.featurize import hashed_doc_vectors
     from bigdata_rags_spark.similarity.knn import lsh_verified_pairs
 

@@ -23,6 +23,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdata_rags_spark.dedup.banded import BandKeys, band_candidates, join_sides
 from bigdata_rags_spark.functions.vectors import as_double_array, cosine, dot, norm
 
 
@@ -526,6 +527,23 @@ def auto_n_planes(
     return max(floor, min(cap, need))
 
 
+def _lsh_keys(
+    vec: F.Column, dim: int, n_planes: int, n_tables: int, probe_bits: int
+) -> tuple[list[F.Column], BandKeys, BandKeys]:
+    """Per-table signature columns ``sig{t}`` and the multi-probe band keys
+    over them: the probing side carries ``(t, sig_t ^ mask)`` for every mask
+    of weight <= probe_bits, the probed side ``(t, sig_t)``."""
+    sigs = [
+        signature_col(
+            vec, _deterministic_hyperplanes(dim, n_planes, seed=f"lsh{t}" if t else "lsh")
+        ).alias(f"sig{t}")
+        for t in range(n_tables)
+    ]
+    masks = probe_masks(n_planes, probe_bits)
+    probes = [(t, F.col(f"sig{t}").bitwiseXOR(F.lit(m))) for t in range(n_tables) for m in masks]
+    return sigs, probes, [(t, F.col(f"sig{t}")) for t in range(n_tables)]
+
+
 def probe_masks(n_planes: int, probe_bits: int) -> list[int]:
     """All XOR masks of Hamming weight <= probe_bits over n_planes bits —
     the multi-probe neighborhood of a signature."""
@@ -557,11 +575,12 @@ def lsh_verified_pairs(
     of ``n_tables`` deterministic hyperplane tables; ONLY candidates are
     scored with the exact cosine and thresholded.
 
-    Subquadratic plan: per table the pair join is a plain EQUI-join on the
-    probed signature — the a-side explodes its C(b,0)+..+C(b,probe_bits)
-    probe signatures (sig XOR mask), and ``a.sig^mask == b.sig`` holds iff
-    Hamming(a,b) == weight(mask), so each qualifying pair meets exactly once
-    per table (the mask IS the xor).  No corpus x corpus stage exists
+    Subquadratic plan: the pair join is ONE equi-join on (table, probed
+    signature) through the banded kernel (`dedup/banded.py`) — the a-side
+    explodes its C(b,0)+..+C(b,probe_bits) probe signatures (sig XOR mask)
+    per table, and ``a.sig^mask == b.sig`` holds iff Hamming(a,b) ==
+    weight(mask), so each qualifying pair meets exactly once per table (the
+    mask IS the xor).  No corpus x corpus stage exists
     anywhere: shuffle volume is O(N * probes) rows and candidate volume is
     collision-bounded, which on clustered real-world embedding corpora is
     the textbook subquadratic ANN join.  Candidates are deduplicated across
@@ -587,41 +606,15 @@ def lsh_verified_pairs(
         # driver fixtures this resolves to the historical 8, so oracle
         # hashes are unchanged, while 10x corpora get 12 automatically.
         n_planes = auto_n_planes(base.count())
-    masks = probe_masks(n_planes, probe_bits)
-
-    cand = None
-    for t in range(n_tables):
-        planes = _deterministic_hyperplanes(dim, n_planes, seed=f"lsh{t}" if t else "lsh")
-        s = base.withColumn("sig", signature_col(F.col("v"), planes))
-        a = s.select(
-            F.col("vid").alias("id_a"),
-            F.explode(
-                F.array(*[F.col("sig").bitwiseXOR(F.lit(m)) for m in masks])
-            ).alias("psig"),
-        )
-        b = s.select(F.col("vid").alias("id_b"), F.col("sig").alias("psig"))
-        pairs = (
-            a.join(b, "psig")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        cand = pairs if cand is None else cand.unionByName(pairs)
-    cand = cand.distinct()
-
-    va = base.select(F.col("vid").alias("id_a"), F.col("v").alias("va")).withColumn(
-        "na", norm(F.col("va"))
-    )
-    vb = base.select(F.col("vid").alias("id_b"), F.col("v").alias("vb")).withColumn(
-        "nb", norm(F.col("vb"))
-    )
+    sigs, probes, keys = _lsh_keys(F.col("v"), dim, n_planes, n_tables, probe_bits)
+    cand = band_candidates(base.select("vid", *sigs), probes, "vid", b_keys=keys)
     # verify: exact cosine in the oracle's op order (dot / lower-id norm /
     # higher-id norm; id_a < id_b by construction)
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
+        join_sides(cand, base.withColumn("n", norm(F.col("v"))), ["v", "n"], "vid")
         .withColumn(
             "similarity",
-            F.round(dot(F.col("va"), F.col("vb")) / F.col("na") / F.col("nb"), 6),
+            F.round(dot(F.col("a_v"), F.col("b_v")) / F.col("a_n") / F.col("b_n"), 6),
         )
         .filter(F.col("similarity") >= threshold)
         .select("id_a", "id_b", "similarity")
@@ -656,8 +649,9 @@ def lsh_bucketed_topk(
       the small side, so this trades query fan-out for recall without
       touching the corpus.
 
-    Candidate (query, neighbor) id pairs are unioned across tables and
-    deduplicated BEFORE scoring, so each survivor costs exactly one cosine
+    Candidate (query, neighbor) id pairs come from one (table, signature)
+    equi-join in the banded kernel's probe mode and are deduplicated BEFORE
+    scoring, so each survivor costs exactly one cosine
     regardless of how many tables bucket it.  Tuning note: the synthetic
     testdata's embeddings are near-random (neighbor cosine ~0.4-0.5, i.e.
     barely tighter than chance), the adversarial case for LSH — recall>=0.9
@@ -667,42 +661,28 @@ def lsh_bucketed_topk(
     """
     from pyspark.sql import Window
 
-    signature = signature_col
     if n_planes is None:
         # self-scaling default — see auto_n_planes / lsh_verified_pairs
         n_planes = auto_n_planes(corpus.count())
-    # XOR masks for all probe signatures within Hamming <= probe_bits
-    masks = probe_masks(n_planes, probe_bits)
 
-    qvecs = queries.select(
-        F.col(id_col).alias("query_id"), as_double_array(F.col(vec_col)).alias("qv")
+    qvecs, cvecs = (
+        f.select(F.col(id_col).alias("vid"), as_double_array(F.col(vec_col)).alias("v"))
+        for f in (queries, corpus)
     )
-    cvecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double_array(F.col(vec_col)).alias("cv")
-    )
-
-    cand = None
-    for t in range(n_tables):
-        planes = _deterministic_hyperplanes(dim, n_planes, seed=f"lsh{t}" if t else "lsh")
-        q = qvecs.withColumn("sig", signature(F.col("qv"), planes)).withColumn(
-            "sig", F.explode(F.array(*[F.col("sig").bitwiseXOR(F.lit(m)) for m in masks]))
-        )
-        c = cvecs.withColumn("sig", signature(F.col("cv"), planes))
-        pairs = q.join(c, "sig").select("query_id", "neighbor_id")
-        cand = pairs if cand is None else cand.unionByName(pairs)
-    cand = cand.distinct()
+    sigs, probes, keys = _lsh_keys(F.col("v"), dim, n_planes, n_tables, probe_bits)
+    cand = band_candidates(
+        qvecs.select("vid", *sigs), probes, "vid", b=cvecs.select("vid", *sigs), b_keys=keys
+    ).filter(F.col("id_a") != F.col("id_b"))
 
     from bigdata_rags_spark.similarity.topk import local_topk_prefilter
 
     w = Window.partitionBy("query_id").orderBy(
         F.col("similarity").desc(), F.col("neighbor_id")
     )
-    scored = (
-        cand.filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(qvecs), "query_id")
-        .join(cvecs, "neighbor_id")
-        .withColumn("similarity", F.round(cosine(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "similarity")
+    scored = join_sides(cand, F.broadcast(qvecs), ["v"], "vid", b=cvecs).select(
+        F.col("id_a").alias("query_id"),
+        F.col("id_b").alias("neighbor_id"),
+        F.round(cosine(F.col("a_v"), F.col("b_v")), 6).alias("similarity"),
     )
     return (
         local_topk_prefilter(

@@ -15,15 +15,17 @@ Run it twice, serialized (CLAUDE.md bench rule):
     SPARK_GRAFT_CPUS=32 python scripts/core_scaling_probe.py
     SPARK_GRAFT_CPUS=8  python scripts/core_scaling_probe.py
 
-Each run writes ``plans/r{N}/core_scaling_c{CPUS}.json`` (one warm-of-2
-sample per query; build_zone is reused if present).  The 8c/32c ratio
-table goes to SCALE.md.
+Each run writes ``plans/r{N}/core_scaling_c{CPUS}.json``: per query, one
+untimed warm-up pass, then three timed passes — ``warm_sec`` holds their
+median and ``samples_sec`` the three samples (build_zone is reused if
+present).  The 8c/32c ratio table goes to SCALE.md.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -72,23 +74,30 @@ def main() -> None:
         spark.catalog.clearCache()
 
     out: dict[str, float] = {}
+    samples: dict[str, list[float]] = {}
     for name in QUERIES:
         spark.sparkContext.setJobDescription(f"core-probe: {name}")
-        best = float("inf")
-        for _ in range(2):  # pass 2 is warm; keep the steady-state one
+        times = []
+        for i in range(4):  # pass 0 warms up untimed; passes 1-3 are timed
             t0 = time.perf_counter()
             REGISTRY[name].spark(spark, WORK).write.mode("overwrite").format(
                 "noop"
             ).save()
-            best = min(best, time.perf_counter() - t0)
+            if i:
+                times.append(round(time.perf_counter() - t0, 3))
             clear()
-        out[name] = round(best, 3)
-        print(f"{name}: {best:.2f}s @ {cpus} cores", flush=True)
+        samples[name] = times
+        out[name] = statistics.median(times)
+        print(f"{name}: {out[name]:.2f}s (med of {times}) @ {cpus} cores", flush=True)
 
     path = os.path.join(REPO, "plans", f"r{ROUND}", f"core_scaling_c{cpus}.json")
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as fh:
-        json.dump({"cpus": int(cpus), "zone": WORK, "warm_sec": out}, fh, indent=1)
+        json.dump(
+            {"cpus": int(cpus), "zone": WORK, "warm_sec": out, "samples_sec": samples},
+            fh,
+            indent=1,
+        )
     print(f"wrote {path}")
 
 

@@ -71,6 +71,41 @@ def test_simhash_identical_docs_same_fingerprint(docs):
     assert (1, 2) in near
 
 
+def test_simhash_near_pairs_equals_its_banded_rule(spark):
+    """``simhash_near_pairs`` against a brute force over its own 16-bit
+    fingerprints: exact at max_hamming=1 (one differing bit leaves a half
+    intact), and at the default 2 exactly the pairs that share the lo or hi
+    half — each pair once, with both fingerprints attached."""
+    from itertools import combinations
+
+    vocab = [f"w{j}" for j in range(40)]
+    rows = [
+        (i, " ".join(vocab[(i * 7 + j * j) % 40] for j in range(12)) + f" v{i % 9}")
+        for i in range(80)
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    fp = {r["doc_id"]: r["simhash"] for r in simhash16(docs).collect()}
+
+    def share_half(x, y):
+        return (x & 255) == (y & 255) or (x >> 8) == (y >> 8)
+
+    def brute(max_hamming):
+        return {
+            (a, b): d
+            for a, b in combinations(sorted(fp), 2)
+            if (d := bin(fp[a] ^ fp[b]).count("1")) <= max_hamming
+            and (max_hamming <= 1 or share_half(fp[a], fp[b]))
+        }
+
+    for max_hamming in (1, 2):
+        got = simhash_near_pairs(docs, max_hamming=max_hamming).collect()
+        pairs = [(r["doc_a"], r["doc_b"]) for r in got]
+        assert len(pairs) == len(set(pairs)), pairs
+        assert all((r["sim_a"], r["sim_b"]) == (fp[r["doc_a"]], fp[r["doc_b"]]) for r in got)
+        assert {(r["doc_a"], r["doc_b"]): r["hamming"] for r in got} == brute(max_hamming)
+    assert brute(1) and set(brute(2)) > set(brute(1))
+
+
 def test_simhash64_bands_and_near_pairs(docs):
     from bigdata_rags_spark.dedup.simhash import simhash64, simhash_near_pairs64
 

@@ -479,14 +479,33 @@ def test_banded_hamming_rejects_lossy_threshold(spark):
 
 def test_banded_hamming_pairs_equals_brute_force(spark):
     """The banded plan must equal the all-pairs Hamming predicate on a
-    corpus with planted near/far pairs, for both the 128-bit w0..w3 layout
-    and the 126-bit audio layout."""
+    corpus with planted near/far pairs, for the 128-bit w0..w3 layout, the
+    126-bit audio layout and both SimHash layouts (4 x 16-bit bands; 8-bit
+    lo/hi halves) — and a pair colliding in several bands comes out once."""
     from itertools import combinations
 
     from bigdata_rags_spark.dedup.hamming import (
         FP126_BAND_EXPRS,
         banded_hamming_pairs,
     )
+    from bigdata_rags_spark.dedup.simhash import (
+        SIMHASH16_BAND_EXPRS,
+        SIMHASH64_BANDS,
+    )
+
+    def brute(rows, max_hamming):
+        return {
+            (ia, ib): d
+            for (ia, *wa), (ib, *wb) in combinations(rows, 2)
+            if (d := sum(bin(x ^ y).count("1") for x, y in zip(wa, wb))) <= max_hamming
+        }
+
+    def banded(rows, cols, band_exprs, max_hamming):
+        df = spark.createDataFrame(rows, ["doc_id", *cols])
+        got = banded_hamming_pairs(df, cols, band_exprs, max_hamming=max_hamming).collect()
+        pairs = [(r["doc_a"], r["doc_b"]) for r in got]
+        assert len(pairs) == len(set(pairs)), pairs  # multi-band collisions emitted once
+        return {(r["doc_a"], r["doc_b"]): r["hamming"] for r in got}
 
     rows = [
         (1, 0b1111, 0, 0, 0),
@@ -495,30 +514,35 @@ def test_banded_hamming_pairs_equals_brute_force(spark):
         (4, 0, 0xFF1F, 0, 0),          # hamming 3 from doc 3
         (5, 123456, 654321, 111, 222), # isolated
     ]
-    h = spark.createDataFrame(rows, ["doc_id", "w0", "w1", "w2", "w3"])
-    got = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in banded_hamming_pairs(h).collect()
-    }
-    exp = {}
-    for (ia, *wa), (ib, *wb) in combinations(rows, 2):
-        d = sum(bin(a ^ b).count("1") for a, b in zip(wa, wb))
-        if d <= 7:
-            exp[(ia, ib)] = d
-    assert got == exp
+    # None: the default 128-bit w0..w3 band layout
+    assert banded(rows, ["w0", "w1", "w2", "w3"], None, 7) == brute(rows, 7)
     # audio layout: same contract over (fp_lo, fp_hi)
     arows = [(1, 0b111, 0), (2, 0b100, 0), (3, 1 << 50, 1 << 40)]
-    ah = spark.createDataFrame(arows, ["doc_id", "fp_lo", "fp_hi"])
-    agot = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in banded_hamming_pairs(ah, ["fp_lo", "fp_hi"], FP126_BAND_EXPRS).collect()
-    }
-    aexp = {}
-    for (ia, la, hb_), (ib, lb, hb2) in combinations(arows, 2):
-        d = bin(la ^ lb).count("1") + bin(hb_ ^ hb2).count("1")
-        if d <= 7:
-            aexp[(ia, ib)] = d
-    assert agot == aexp
+    assert banded(arows, ["fp_lo", "fp_hi"], FP126_BAND_EXPRS, 7) == brute(arows, 7)
+    # SimHash64: 4 x 16-bit bands at the pigeonhole limit hamming <= 3
+    srows = [
+        (1, 0x1234, 0x5678, 0x9ABC, 0xDEF0),
+        (2, 0x1234, 0x5678, 0x9ABC, 0xDEF1),  # hamming 1 from 1: shares 3 bands
+        (3, 0x1235, 0x5679, 0x9ABD, 0xDEF0),  # hamming 3 from 1, 4 from 2
+        (4, 0xFFFF, 0, 0xFFFF, 0),
+        (5, 0xFFFE, 1, 0xFFFF, 0),            # hamming 2 from 4: shares 2 bands
+        (6, 0x1234, 0x5678, 0x9ABC, 0xDE0F),  # shares 3 bands with 1, hamming 8
+    ]
+    sexp = brute(srows, 3)
+    assert (1, 2) in sexp and (4, 5) in sexp and (1, 6) not in sexp
+    assert banded(srows, SIMHASH64_BANDS, SIMHASH64_BANDS, 3) == sexp
+    # SimHash16: two 8-bit halves, exact at hamming <= 1
+    hrows = [
+        (1, 0x1234),
+        (2, 0x1235),  # hamming 1 from 1, same hi
+        (3, 0x1334),  # hamming 1 from 1, same lo
+        (4, 0x1234),  # identical to 1: collides in both halves
+        (5, 0xABCD),
+        (6, 0x1335),  # hamming 2 from 1: beyond the threshold
+    ]
+    hexp = brute(hrows, 1)
+    assert (1, 4) in hexp and (1, 2) in hexp and (1, 3) in hexp
+    assert banded(hrows, ["simhash"], SIMHASH16_BAND_EXPRS, 1) == hexp
 
 
 def test_video_probe_retrieves_identical_clip(spark):

@@ -58,6 +58,8 @@ def test_minhash_band_count_tracks_historical_threshold():
     ("embeddings", PLANES_BAND, "auto_n_planes -> 8-plane LSH oracles"),
     ("embeddings", CELLS_BAND, "auto_n_cells -> 16-cell IVF/SemDeDup oracles"),
     ("documents", MINHASH_BAND, "auto_minhash_params -> 12/2 MinHash oracles"),
+    # text_hashed_{,idf_}near_dups size their planes from the documents count
+    ("documents", PLANES_BAND, "auto_n_planes -> 8-plane text LSH oracles"),
 ])
 def test_driver_fixtures_inside_calibration_bands(sf_smoke, sf_oracle, table, band, rule):
     for sf_dir in (sf_smoke, sf_oracle):
